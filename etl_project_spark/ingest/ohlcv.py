@@ -26,11 +26,11 @@ from __future__ import annotations
 import datetime as dt
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_project_spark.session import prepare
-from etl_project_spark.sources.rest import OhlcvRestSource, normalize_bars
+from etl_project_spark.sources.rest import BAR_SCHEMA, OhlcvRestSource, parse_bar_time
 
 PARTITION_COLS = ("period_date", "coin")
 
@@ -46,54 +46,86 @@ def ingest_tick(
     """One EP1 tick: fetch the latest bar(s) per coin and append to
     bronze. Returns rows written.
 
-    ``dedupe=True`` makes the append idempotent at bar granularity: the
-    fetched batch is anti-joined against the bronze rows already holding
-    its (coin, time_period_start) keys before writing, so a replayed
-    tick (a restarted ``ingest_loop`` re-running the last uncommitted
-    micro-batch, or a cron double-fire) appends nothing the store
-    already has. The existing-keys scan is partition-pruned to the
-    batch's (period_date, coin) partitions — one day of 5-min bars per
-    coin, bounded — and broadcast into the anti-join. The row count is
-    taken via ``Observation`` on the write job itself, so the (possibly
-    non-deterministic) fetch lineage executes exactly once."""
+    ``dedupe=True`` makes the append idempotent at bar granularity: bars
+    whose (coin, time_period_start) key bronze already holds are dropped
+    before writing, so a replayed tick (a restarted ``ingest_loop``
+    re-running the last uncommitted micro-batch, or a cron double-fire)
+    appends nothing the store already has. The existing keys come from
+    one scan of only the batch's own (period_date, coin) directories —
+    at most 288 per coin-day — collected to the driver and matched
+    against the fetched rows there. A new tick therefore runs one scan
+    job and one write job; a full replay runs the scan alone and writes
+    nothing. The fetched rows are a driver-side list, so the row count
+    is their length and the fetch runs exactly once."""
     prepare(spark)
     rows = source.fetch_latest(period=period, limit=limit)
+    if dedupe:
+        rows = _drop_already_ingested(spark, rows, bronze_path)
     if not rows:
         return 0
-    df = source.to_df(spark, rows)
-    if dedupe:
-        df = _drop_already_ingested(spark, df, rows, bronze_path)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    append_bars(df, bronze_path)
-    return int(obs.get["n"])
+    append_bars(source.to_df(spark, rows), bronze_path)
+    return len(rows)
 
 
 def _drop_already_ingested(
-    spark: SparkSession,
-    df: DataFrame,
-    rows: list[dict],
-    bronze_path: str,
-) -> DataFrame:
-    """Anti-join a (tiny) fetched batch against the bronze keys it could
-    collide with. Reads only the batch's own (period_date, coin)
-    partitions; returns ``df`` unchanged when bronze doesn't exist yet."""
-    try:
-        existing = spark.read.parquet(bronze_path)
-    except Exception:  # first tick: no bronze store yet
-        return df
-    dates = sorted({str(r["time_period_start"])[:10] for r in rows})
-    coins = sorted({r["coin"] for r in rows})
-    keys = (
-        existing.filter(
-            F.col("period_date").isin(dates) & F.col("coin").isin(coins)
-        )
-        .select("coin", "time_period_start")
-        .distinct()
+    spark: SparkSession, rows: list[dict], bronze_path: str
+) -> list[dict]:
+    """The fetched rows whose (coin, time_period_start) key is not yet in
+    bronze. Reads only the batch's own (period_date, coin) partitions;
+    a partition that does not exist has nothing to collide with."""
+    keys = [(r["coin"], parse_bar_time(r["time_period_start"])) for r in rows]
+    existing = read_partitions(
+        spark, bronze_path, [(str(ts.date()), coin) for coin, ts in keys]
     )
-    return df.join(F.broadcast(keys), ["coin", "time_period_start"], "left_anti")
+    if existing is None:
+        return rows
+    seen = {
+        (r["coin"], r["time_period_start"])
+        for r in existing.select("coin", "time_period_start").collect()
+    }
+    return [r for r, k in zip(rows, keys) if k not in seen]
+
+
+def read_partitions(
+    spark: SparkSession, root: str, partitions: Iterable[tuple[str, ...]]
+) -> DataFrame | None:
+    """Read only the named partitions of a store partitioned by
+    ``PARTITION_COLS``. Each partition is a prefix of their values:
+    ``(day,)`` is the whole day, ``(day, coin)`` one coin's directory.
+
+    No job runs to build the DataFrame: ``basePath`` keeps both partition
+    columns, the schema is ``BAR_SCHEMA`` rather than inferred, and only
+    the named directories are listed, never the store root. Directories
+    that do not exist are skipped; ``None`` when none does. Every other
+    error, a corrupt file or a denied read, propagates."""
+    jvm = spark.sparkContext._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    names = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    root = root.rstrip("/")
+    fs = Path(root).getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    dirs = []
+    for part in dict.fromkeys(partitions):
+        # values escaped in the path as Spark's partitioned writes do
+        d = "/".join(
+            [root]
+            + [f"{c}={names.escapePathName(v)}" for c, v in zip(PARTITION_COLS, part)]
+        )
+        if fs.exists(Path(d)):
+            dirs.append(d)
+    if not dirs:
+        return None
+    return spark.read.schema(BAR_SCHEMA).option("basePath", root).parquet(*dirs)
+
+
+def _overwrite_partitions(df: DataFrame, path: str) -> None:
+    """Idempotent write: replace exactly the partitions ``df`` holds.
+    Dynamic mode is set on this write only, never on the session."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*PARTITION_COLS)
+        .parquet(path)
+    )
 
 
 def append_bars(df: DataFrame, bronze_path: str) -> None:
@@ -108,17 +140,16 @@ def export_day(
 
     Dynamic partition overwrite = the Spark-native replacement for the
     CSV → S3 → Redshift COPY chain (K2/K3/K4): the partitioned gold
-    Parquet *is* the warehouse table. Returns rows exported."""
+    Parquet *is* the warehouse table. Returns rows exported, counted by
+    an ``Observation`` on the write job itself; a day bronze does not
+    hold exports nothing and runs no job."""
     prepare(spark)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    day = (
-        spark.read.parquet(bronze_path)
-        .filter(F.col("period_date") == F.lit(str(ds)).cast("date"))
-    )
-    n = day.count()
-    if n:
-        day.write.mode("overwrite").partitionBy(*PARTITION_COLS).parquet(gold_path)
-    return n
+    day = read_partitions(spark, bronze_path, [(str(ds)[:10],)])
+    if day is None:
+        return 0
+    obs = Observation()
+    _overwrite_partitions(day.observe(obs, F.count(F.lit(1)).alias("n")), gold_path)
+    return int(obs.get["n"])
 
 
 def compact_day(
@@ -126,18 +157,12 @@ def compact_day(
 ) -> None:
     """Small-file compaction for one day partition (the 5-minute cadence
     writes ~288 tiny files/coin/day): rewrite the partition at
-    target_files per coin via repartition, idempotent overwrite."""
+    target_files per coin via repartition, idempotent overwrite. A day
+    the store does not hold is left alone."""
     prepare(spark)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    day = spark.read.parquet(path).filter(
-        F.col("period_date") == F.lit(str(ds)).cast("date")
-    )
-    (
-        day.repartition(target_files, "coin")
-        .write.mode("overwrite")
-        .partitionBy(*PARTITION_COLS)
-        .parquet(path)
-    )
+    day = read_partitions(spark, path, [(str(ds)[:10],)])
+    if day is not None:
+        _overwrite_partitions(day.repartition(target_files, "coin"), path)
 
 
 def fake_bars(

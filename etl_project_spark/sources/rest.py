@@ -13,17 +13,20 @@ int DDL at airflow_dags.py:100-103) is shared by both paths.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DateType,
     DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
 )
 
 DEFAULT_COINS = {  # reference symbols, airflow_dags.py:156-172
@@ -53,6 +56,20 @@ RAW_BAR_SCHEMA = StructType(
 # at use sites would append a duplicate `coin` field per call.
 BAR_WITH_COIN_SCHEMA = StructType(
     [*RAW_BAR_SCHEMA.fields, StructField("coin", StringType())]
+)
+
+_TS_COLS = ("time_period_start", "time_period_end", "time_open", "time_close")
+
+# What ``normalize_bars`` produces, in the column order a read of the
+# (period_date, coin)-partitioned bronze and gold stores returns: the data
+# columns, then the partition columns. Store readers pass it explicitly,
+# so no schema-inference job runs.
+BAR_SCHEMA = StructType(
+    [
+        StructField(f.name, TimestampNTZType()) if f.name in _TS_COLS else f
+        for f in RAW_BAR_SCHEMA.fields
+    ]
+    + [StructField("period_date", DateType()), StructField("coin", StringType())]
 )
 
 
@@ -93,8 +110,16 @@ class OhlcvRestSource:
         return rows
 
     def to_df(self, spark: SparkSession, rows: Iterable[dict]) -> DataFrame:
-        raw = spark.createDataFrame(list(rows), BAR_WITH_COIN_SCHEMA)
-        return normalize_bars(raw)
+        # Handed over as one Arrow table the rows live in the JVM; a list
+        # would be pickled into a Python RDD that every task of the write
+        # job unpickles through a Python worker (~0.3 s of a tick's write).
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        table = pa.Table.from_pylist(
+            list(rows), schema=to_arrow_schema(BAR_WITH_COIN_SCHEMA)
+        )
+        return normalize_bars(spark.createDataFrame(table))
 
 
 def normalize_bars(raw: DataFrame) -> DataFrame:
@@ -103,9 +128,8 @@ def normalize_bars(raw: DataFrame) -> DataFrame:
     derived period_date partition column (airflow_dags.py:49). Prices stay
     double — the reference's int truncation (airflow_dags.py:100-103) is a
     documented bug we do not replicate."""
-    ts_cols = ["time_period_start", "time_period_end", "time_open", "time_close"]
     out = raw
-    for c in ts_cols:
+    for c in _TS_COLS:
         out = out.withColumn(
             c,
             F.to_timestamp_ntz(
@@ -114,6 +138,16 @@ def normalize_bars(raw: DataFrame) -> DataFrame:
             ),
         )
     return out.withColumn("period_date", F.to_date("time_period_start"))
+
+
+def parse_bar_time(s: str) -> dt.datetime:
+    """Driver-side twin of ``normalize_bars``' timestamp parse, for
+    matching raw bars against stored keys without a Spark job: the
+    naive datetime Spark stores, fraction truncated to microseconds."""
+    head, _, frac = s.removesuffix("Z").partition(".")
+    return dt.datetime.strptime(head, "%Y-%m-%dT%H:%M:%S").replace(
+        microsecond=int(frac[:6].ljust(6, "0"))
+    )
 
 
 # --- Spark 4 Python DataSource wrapper ---------------------------------------

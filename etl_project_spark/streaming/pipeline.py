@@ -234,12 +234,8 @@ def partition_overwrite_sink(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
-            batch_df.sparkSession.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-        )
-        (
             batch_df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partition_col)
             .parquet(gold_dir)
         )
@@ -311,10 +307,10 @@ def ingest_loop(
     checkpointing, and restart semantics are Structured Streaming's
     (a restarted query resumes the cadence from the checkpoint; no
     external cron, no Airflow). The foreachBatch side effect is made
-    idempotent at bar granularity (``ingest_tick(dedupe=True)``
-    anti-joins the fetch against bronze's existing (coin,
-    time_period_start) keys), so the at-least-once replay of the last
-    uncommitted micro-batch after a crash appends no duplicate bars.
+    idempotent at bar granularity (``ingest_tick(dedupe=True)`` drops
+    fetched bars whose (coin, time_period_start) key the batch's own
+    bronze partitions already hold), so the at-least-once replay of the
+    last uncommitted micro-batch after a crash appends no duplicate bars.
     ``run_available_now`` + ``file_event_stream`` remain the
     deterministic catchup=False twin the tests replay; this is the
     steady-state driver a deployment leaves running. Returns the live

@@ -4,11 +4,22 @@ contract, and the Structured Streaming twins."""
 
 from __future__ import annotations
 
+import datetime as dt
+import uuid
+
 import pyspark.sql.functions as F
+import pytest
 
 from etl_project_spark.ingest import ohlcv
 from etl_project_spark.sources.files import read_csv, write_csv_export
-from etl_project_spark.sources.rest import OhlcvRestSource, normalize_bars
+from etl_project_spark.sources.rest import (
+    BAR_SCHEMA,
+    BAR_WITH_COIN_SCHEMA,
+    DEFAULT_COINS,
+    OhlcvRestSource,
+    normalize_bars,
+    parse_bar_time,
+)
 from etl_project_spark.streaming import pipeline as sp
 
 
@@ -91,6 +102,230 @@ def test_compact_day(spark, tmp_path):
     ohlcv.compact_day(spark, bronze, "2023-04-26")
     after_df = spark.read.parquet(bronze)
     assert after_df.count() == before  # content preserved
+
+
+def _serving(bars):
+    """A source whose every fetch returns, per coin, all of ``bars`` for
+    that coin (``fake_bars`` rows) — the ``limit`` a tick asks for is the
+    caller's business."""
+
+    def fetcher(url, headers):
+        coin = next(c for c, s in DEFAULT_COINS.items() if f"/{s}/" in url)
+        return [
+            {k: v for k, v in b.items() if k != "coin"}
+            for b in bars
+            if b["coin"] == coin
+        ]
+
+    return OhlcvRestSource("test-key", fetcher=fetcher)
+
+
+def _files(root):
+    return sorted(root.rglob("*.parquet"))
+
+
+def _corrupt(root, day, coin="bitcoin"):
+    d = root / f"period_date={day}" / f"coin={coin}"
+    d.mkdir(parents=True, exist_ok=True)
+    (d / "part-corrupt.parquet").write_bytes(b"not a parquet file" * 8)
+
+
+def test_ingest_tick_corrupt_own_partition_raises(spark, tmp_path):
+    """Only an absent partition means "nothing to dedupe against": an
+    unreadable file among the batch's own partitions fails the tick
+    instead of silently appending without dedupe."""
+    bronze = tmp_path / "bronze"
+    bars = ohlcv.fake_bars(n_bars=2)
+    ohlcv.ingest_tick(spark, _serving(bars[::2]), str(bronze), dedupe=True)
+    _corrupt(bronze, "2023-04-26")
+    before = _files(bronze)
+    with pytest.raises(Exception, match="part-corrupt.parquet"):
+        ohlcv.ingest_tick(spark, _serving(bars), str(bronze), limit=2,
+                          dedupe=True)
+    assert _files(bronze) == before  # nothing appended
+
+
+def test_ingest_tick_reads_only_its_own_partitions(spark, tmp_path):
+    """A corrupt file in another day's partition is never opened: the
+    dedupe scan is addressed to the batch's (period_date, coin)
+    directories, not the store root."""
+    bronze = tmp_path / "bronze"
+    _corrupt(bronze, "2023-04-25")
+    src = _source()
+    assert ohlcv.ingest_tick(spark, src, str(bronze), dedupe=True) == 3
+    assert ohlcv.ingest_tick(spark, src, str(bronze), dedupe=True) == 0
+    day = ohlcv.read_partitions(spark, str(bronze), [("2023-04-26",)])
+    assert day.count() == 3
+
+
+def test_ingest_tick_dedupe_spans_midnight(spark, tmp_path):
+    """A limit=2 batch straddling midnight dedupes against both date
+    partitions: old bars on either side are dropped, new ones kept."""
+    bronze = str(tmp_path / "bronze")
+    first = ohlcv.fake_bars(start="2023-04-26T23:55:00.0000000Z", n_bars=2)
+    assert ohlcv.ingest_tick(spark, _serving(first), bronze, limit=2,
+                             dedupe=True) == 6
+    assert ohlcv.ingest_tick(spark, _serving(first), bronze, limit=2,
+                             dedupe=True) == 0
+    # 23:50 (new), 23:55 (old), 00:00 (old), 00:05 (new) per coin
+    wider = ohlcv.fake_bars(start="2023-04-26T23:50:00.0000000Z", n_bars=4)
+    assert ohlcv.ingest_tick(spark, _serving(wider), bronze, limit=4,
+                             dedupe=True) == 6
+    got = spark.read.parquet(bronze)
+    assert got.count() == 12
+    assert got.select("coin", "time_period_start").distinct().count() == 12
+    assert {str(r[0]) for r in got.select("period_date").distinct().collect()} == {
+        "2023-04-26",
+        "2023-04-27",
+    }
+
+
+def test_ingest_tick_dedupe_after_compaction(spark, tmp_path):
+    """A replayed bar from a day already compacted into one file per
+    coin is still dropped."""
+    bronze = tmp_path / "bronze"
+    bars = ohlcv.fake_bars(n_bars=4)
+    for i in range(4):  # one tick per bar: four files per coin
+        tick = [b for j, b in enumerate(bars) if j % 4 == i]
+        ohlcv.ingest_tick(spark, _serving(tick), str(bronze), dedupe=True)
+    ohlcv.compact_day(spark, str(bronze), "2023-04-26")
+    for coin in ("bitcoin", "ethereum", "ripple"):
+        assert len(_files(bronze / "period_date=2023-04-26" / f"coin={coin}")) == 1
+    replay = [b for j, b in enumerate(bars) if j % 4 == 2]
+    assert ohlcv.ingest_tick(spark, _serving(replay), str(bronze),
+                             dedupe=True) == 0
+    assert spark.read.parquet(str(bronze)).count() == 12
+
+
+def test_ingest_tick_dedupe_escaped_partition_value(spark, tmp_path):
+    """Partition directories are addressed by the names Spark writes, so
+    a coin whose name Spark escapes in paths still dedupes."""
+    bars = ohlcv.fake_bars(coins=("wrapped:btc/v2",), n_bars=1)
+    src = OhlcvRestSource(
+        "k",
+        coins={"wrapped:btc/v2": "SYNTH_WBTC"},
+        fetcher=lambda url, headers: [
+            {k: v for k, v in b.items() if k != "coin"} for b in bars
+        ],
+    )
+    bronze = str(tmp_path / "bronze")
+    assert ohlcv.ingest_tick(spark, src, bronze, dedupe=True) == 1
+    assert ohlcv.ingest_tick(spark, src, bronze, dedupe=True) == 0
+    assert spark.read.parquet(bronze).collect()[0]["coin"] == "wrapped:btc/v2"
+
+
+def test_export_and_compact_absent_day_are_noops(spark, tmp_path):
+    bronze, gold = tmp_path / "bronze", tmp_path / "gold"
+    # no store at all
+    assert ohlcv.export_day(spark, str(bronze), str(gold), "2023-04-26") == 0
+    ohlcv.compact_day(spark, str(bronze), "2023-04-26")
+    assert not bronze.exists() and not gold.exists()
+    # a store without that day
+    src = OhlcvRestSource("k")
+    ohlcv.append_bars(src.to_df(spark, ohlcv.fake_bars(n_bars=2)), str(bronze))
+    before = _files(bronze)
+    assert ohlcv.export_day(spark, str(bronze), str(gold), "2023-05-01") == 0
+    ohlcv.compact_day(spark, str(bronze), "2023-05-01")
+    assert _files(bronze) == before
+    assert not gold.exists()
+
+
+def test_overwrite_writes_keep_session_conf(spark, tmp_path):
+    """export_day and compact_day overwrite only the day they touch
+    (dynamic mode set on the write), and leave the caller's session
+    confs as they found them — here a session in static mode, where a
+    whole-store overwrite would wipe the other day."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        confs = dict(spark.conf.getAll)
+        bronze, gold = str(tmp_path / "bronze"), str(tmp_path / "gold")
+        src = OhlcvRestSource("k")
+        ohlcv.append_bars(src.to_df(spark, ohlcv.fake_bars(n_bars=2)), bronze)
+        day2 = ohlcv.fake_bars(start="2023-04-27T00:00:00.0000000Z", n_bars=3)
+        ohlcv.append_bars(src.to_df(spark, day2), bronze)
+        assert ohlcv.export_day(spark, bronze, gold, "2023-04-26") == 6
+        assert ohlcv.export_day(spark, bronze, gold, dt.date(2023, 4, 27)) == 9
+        ohlcv.compact_day(spark, bronze, "2023-04-26")
+        assert spark.read.parquet(gold).count() == 15  # day 1 survived day 2
+        assert spark.read.parquet(bronze).count() == 15  # day 2 survived
+        assert dict(spark.conf.getAll) == confs
+    finally:
+        spark.conf.set(key, mode)
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ingest_tick_job_count(spark, tmp_path):
+    """A new tick is one scan job plus one write job; a fully replayed
+    tick is the scan alone. No listing or schema-inference job runs."""
+    bronze = str(tmp_path / "bronze")
+    bars = ohlcv.fake_bars(n_bars=3)
+    ticks = [_serving([b for j, b in enumerate(bars) if j % 3 == i])
+             for i in range(3)]
+    ohlcv.ingest_tick(spark, ticks[0], bronze, dedupe=True)
+    ohlcv.ingest_tick(spark, ticks[1], bronze, dedupe=True)
+    new = _jobs(spark, lambda: ohlcv.ingest_tick(spark, ticks[2], bronze,
+                                                 dedupe=True))
+    replay = _jobs(spark, lambda: ohlcv.ingest_tick(spark, ticks[2], bronze,
+                                                    dedupe=True))
+    assert new <= 2
+    assert replay == 1  # at most one, and the count sees jobs at all
+    assert spark.read.parquet(bronze).count() == 9
+
+
+def test_bar_schema_and_time_parse_match_spark(spark, tmp_path):
+    """BAR_SCHEMA is normalize_bars' output in the stores' column order,
+    and parse_bar_time — the driver-side key parse of the dedupe —
+    agrees with the timestamps Spark stores, fraction digits included."""
+    bars = ohlcv.fake_bars(n_bars=1)
+    stamps = [
+        "2023-04-26T00:00:00.0000000Z",
+        "2023-04-26T23:59:59.9999999Z",
+        "2023-04-26T12:30:00.1234567Z",
+        "2023-04-26T12:30:00.123Z",
+    ]
+    for b, t in zip(bars, stamps):
+        b["time_period_start"] = t
+    df = OhlcvRestSource("k").to_df(spark, bars)
+    fields = sorted((f.name, f.dataType) for f in df.schema)
+    assert fields == sorted((f.name, f.dataType) for f in BAR_SCHEMA)
+    bronze = str(tmp_path / "bronze")
+    ohlcv.append_bars(df, bronze)
+    stored = spark.read.parquet(bronze)
+    assert [(f.name, f.dataType) for f in stored.schema] == [
+        (f.name, f.dataType) for f in BAR_SCHEMA
+    ]
+    got = {r["coin"]: r["time_period_start"] for r in stored.collect()}
+    want = {b["coin"]: parse_bar_time(b["time_period_start"]) for b in bars}
+    assert got == want
+
+
+def test_to_df_matches_row_path(spark):
+    """``to_df`` hands the rows over as an Arrow table; on CoinAPI-shaped
+    payloads, nulls and absent fields included, it yields exactly what
+    ``createDataFrame`` of the row list under BAR_WITH_COIN_SCHEMA does."""
+    bars = ohlcv.fake_bars(n_bars=4)
+    bars[0]["price_open"] = None
+    bars[1]["trades_count"] = None
+    bars[2]["not_in_schema"] = "x"
+    del bars[3]["volume_traded"]
+    got = OhlcvRestSource("k").to_df(spark, bars)
+    want = normalize_bars(spark.createDataFrame(bars, BAR_WITH_COIN_SCHEMA))
+    assert got.schema == want.schema
+    assert sorted(got.collect(), key=str) == sorted(want.collect(), key=str)
 
 
 def test_csv_export_contract(spark, tmp_path):
